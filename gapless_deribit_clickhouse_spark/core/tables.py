@@ -39,9 +39,12 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # catalog. This memoizes the ANALYZED LOGICAL PLAN only: no data, no
 # results, nothing persisted — every action still scans the parquet
 # input, and a fresh process/session (every bench or oracle
-# invocation) starts cold. Keyed on the session's applicationId plus
-# the file's (mtime, size) so a stopped session or a rewritten file
-# can never serve a stale plan.
+# invocation) starts cold. Keyed on the session object itself — a
+# DataFrame is bound to the session that analyzed it, so a
+# ``newSession()`` sibling must never receive its parent's plan (the
+# cached DataFrame pins its session, so the id cannot be recycled) —
+# plus the file's (mtime, size) so a rewritten file can never serve a
+# stale plan.
 _CATALOG: dict[tuple, DataFrame] = {}
 
 
@@ -51,7 +54,7 @@ def _catalog_key(spark: SparkSession, path: str) -> tuple | None:
     except OSError:
         return None
     return (
-        spark.sparkContext.applicationId,
+        id(spark),
         os.path.abspath(path),
         st.st_mtime_ns,
         st.st_size,
@@ -62,20 +65,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, adapting the events timestamp.
 
     Side effects, applied for the rest of the session: a UTC session
-    timezone on every catalog-miss load (date/hour extraction in any binding drifts
-    vs the UTC-based oracle if a bare session on a non-UTC machine
+    timezone on every load, catalog hit or miss (date/hour extraction
+    in any binding drifts vs the UTC-based oracle if a bare session on a non-UTC machine
     keeps its machine zone — and it must not flip mid-run depending on
     which table loads first), plus ``nanosAsLong`` for events (a
     TIMESTAMP(NANOS) footer is otherwise rejected outright; later
     nanos reads get LongType and must normalize as done here).
     Runtime-settable confs, applied HERE because callers (including
     the correctness harness) may hand us a bare SparkSession."""
-    key = _catalog_key(spark, f"{sf_dir}/{name}.parquet")
-    if key is not None and key in _CATALOG:
-        return _CATALOG[key]
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    key = _catalog_key(spark, f"{sf_dir}/{name}.parquet")
+    if key is not None and key in _CATALOG:
+        return _CATALOG[key]
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         # Normalize ts to microsecond TimestampType regardless of how the

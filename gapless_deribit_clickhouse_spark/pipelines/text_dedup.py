@@ -23,9 +23,7 @@ and tests can reproduce values exactly.
 
 from __future__ import annotations
 
-import threading
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.core.partitioning import (
@@ -305,50 +303,38 @@ def minhash_affine_params(num_hashes: int, seed: int = 12345) -> list[tuple[int,
     ]
 
 
-def minhash_signatures(
+def _hashed_shingles(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    base_hash: str = "md5",
+    text_col: str,
+    id_col: str,
+    n: int,
+    base_hash: str,
+    with_sset: bool = False,
 ) -> DataFrame:
-    """Per doc: array of ``num_hashes`` bigint min-hash values over its
-    shingle set.
+    """(id, __harr[, sset]): the ONE tokenize+shingle+hash pass both
+    the signature minima and the exact-Jaccard verification derive
+    from.
 
-    Computed entirely WITHIN the row — no explode, NO SHUFFLE. The
-    base md5 hash runs ONCE per shingle (its own projection; Spark's
-    CollapseProject keeps non-cheap expressions single-evaluated);
-    the ``num_hashes`` minima are affine transforms of that base —
-    cheap long arithmetic instead of per-seed md5 (32x fewer digest
-    evaluations; md5 dominated execution). Built as SQL strings: one
-    F.expr = one py4j call, not hundreds of Column-API round-trips.
+    ``__harr`` holds the per-shingle base hash, UNREDUCED (60-bit md5
+    prefix / full signed xxhash64); the mod-p reduction the affine
+    minhash family needs happens inside :func:`_signatures_from_hashed`
+    — reducing here would shrink the comparison domain to 31 bits and
+    let unrelated large shingle sets accrue spurious intersections.
+    ``shingles()`` is distinct and the hash effectively injective at
+    this width, so ``__harr`` doubles as a comparison set.
 
     ``base_hash``: ``md5`` (default) is bit-reproducible in the DuckDB
     oracle; ``xxhash64`` is the scale path — the same codegen'd 64-bit
     hash Spark's own MinHashLSH family builds on, ~3x cheaper than a
     hex digest + parse, engine-internal only. Near-dup quality is
     equivalent (both are uniform over the shingle set); signatures are
-    NOT comparable across the two modes."""
-    harr = _hashed_shingles(df, text_col, id_col, n, base_hash)
-    return _signatures_from_hashed(harr, num_hashes)
+    NOT comparable across the two modes.
 
-
-def _hashed_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int, base_hash: str
-) -> DataFrame:
-    """(id, __harr): the hashed-shingle array — the ONE
-    tokenize+shingle+hash pass both the signature minima and the
-    exact-Jaccard verification derive from. Values are UNREDUCED
-    (60-bit md5 prefix / full signed xxhash64) so the verification
-    sets keep an effectively collision-free domain; the mod-p
-    reduction the affine minhash family needs happens inside
-    :func:`_signatures_from_hashed` — reducing here would shrink the
-    comparison domain to 31 bits and let unrelated large shingle sets
-    accrue spurious intersections. ``shingles()`` is distinct and the
-    hash effectively injective at this width, so ``__harr`` doubles as
-    the comparison set (the same collision tolerance the 64-bit
-    ``_hashed_sets`` verify arrays always had)."""
+    ``with_sset`` adds the dedup index's verification set,
+    ``array_distinct(xxhash64(shingle))`` whatever ``base_hash`` is (the
+    on-disk ``sets`` domain), from the same shingle array: with
+    ``xxhash64`` it IS the distinct base hash, so nothing is hashed
+    twice."""
     arr = ensure_parallelism(df).select(
         F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("__arr")
     )
@@ -361,10 +347,15 @@ def _hashed_shingles(
         base = "xxhash64(s)"
     else:
         raise ValueError(f"base_hash must be md5|xxhash64, got {base_hash!r}")
-    return arr.select(
-        "id",
-        F.expr(f"transform(__arr, s -> {base})").alias("__harr"),
-    )
+    cols = [F.col("id"), F.expr(f"transform(__arr, s -> {base})").alias("__harr")]
+    if with_sset and base_hash == "md5":
+        cols.append(
+            F.expr("array_distinct(transform(__arr, s -> xxhash64(s)))").alias("sset")
+        )
+    harr = arr.select(*cols)
+    if with_sset and base_hash == "xxhash64":
+        harr = harr.withColumn("sset", F.array_distinct("__harr"))
+    return harr
 
 
 def _signatures_from_hashed(harr: DataFrame, num_hashes: int) -> DataFrame:
@@ -420,18 +411,16 @@ def minhash_params(
     return (r * b, b)
 
 
-def _hashed_sets(
-    df: DataFrame, text_col: str, id_col: str, n: int, out_id: str, out_set: str
-) -> DataFrame:
-    """(id, hashed-shingle array) projection — the exact-Jaccard
-    verification input shared by minhash_lsh_pairs and
-    incremental_dedup."""
-    return ensure_parallelism(df).select(
-        F.col(id_col).alias(out_id),
-        F.array_distinct(
-            F.transform(shingles(F.col(text_col), n), lambda s: F.xxhash64(s))
-        ).alias(out_set),
-    )
+def _lsh_params(
+    threshold: float, num_hashes: int | None, bands: int | None
+) -> tuple[int, int]:
+    """``(num_hashes, bands)`` with either one left ``None`` filled in
+    from :func:`minhash_params`."""
+    if num_hashes is None or bands is None:
+        auto_hashes, auto_bands = minhash_params(threshold)
+        num_hashes = auto_hashes if num_hashes is None else num_hashes
+        bands = auto_bands if bands is None else bands
+    return num_hashes, bands
 
 
 def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -471,10 +460,7 @@ def minhash_lsh_pairs(
     via :func:`minhash_params` (the defaults 32/8 stay for oracle
     stability).
     """
-    if num_hashes is None or bands is None:
-        auto_hashes, auto_bands = minhash_params(threshold)
-        num_hashes = auto_hashes if num_hashes is None else num_hashes
-        bands = auto_bands if bands is None else bands
+    num_hashes, bands = _lsh_params(threshold, num_hashes, bands)
     # the hashed-shingle pass (tokenize + shingle + per-shingle hash —
     # the dominant map cost of the whole tier) runs ONCE and feeds
     # both the signature minima and the verification sets; without the
@@ -713,109 +699,23 @@ def incremental_dedup(
     corpus signatures with exact-Jaccard verification — a new doc
     with jaccard >= threshold against ANY corpus doc is dropped.
 
-    Corpus-side cost is a few NARROW passes (text digest; in-row
-    minhash signature + band explosion; shingle arrays for the
-    candidate verification) — no corpus-corpus pairs are ever
-    generated (that work happened when the corpus was built). The
-    digest/band tables are pure functions of the corpus, so a
-    production deployment persists them once and appends per batch:
-    that path is :func:`build_dedup_index` +
-    :func:`incremental_dedup_indexed` (equivalent output, zero
-    corpus-text passes per batch). This function recomputes them from
-    ``corpus_df`` for the index-free one-shot case.
-    Candidate volume is batch-sized x band-collision rate, so the
-    cross join scales with the BATCH, not the corpus."""
-    if num_hashes is None or bands is None:
-        auto_hashes, auto_bands = minhash_params(threshold)
-        num_hashes = auto_hashes if num_hashes is None else num_hashes
-        bands = auto_bands if bands is None else bands
-
-    # Corpus-side hashed shingles FIRST (optimization r13, guide §2.6
-    # overlap): the pass is checkpointed and entirely independent of
-    # the batch, so a background action materializes its blocks while
-    # the driver constructs the within-batch pipeline — whose
-    # connected-components stage runs eager jobs that would otherwise
-    # leave the corpus-side map pass to serialize after them inside
-    # the final action. FIFO scheduling back-fills idle cores; if the
-    # warm-up fails (or is still running) the main lineage simply
-    # computes the missing partitions itself.
-    harr_corp = _hashed_shingles(
-        corpus_df, text_col, id_col, n, base_hash
-    ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-
-    def _warm_corpus() -> None:
-        try:
-            harr_corp.count()
-        except Exception:
-            pass  # the main path recomputes (and reports) on its own
-
-    threading.Thread(target=_warm_corpus, daemon=True).start()
-
-    # (1) within-batch exact + near dedup. No extra barrier here: the
-    # chain's reuse point is the post-digest checkpoint below, and
-    # near_dedup_corpus's own ``survivors`` checkpoint already cuts
-    # the expensive prefix, so this plan segment executes exactly once
-    # (optimization r13 removed a redundant second block-store write
-    # of the full batch text between the two).
-    batch = near_dedup_corpus(
-        new_df, text_col, id_col, n, threshold, num_hashes, bands, base_hash
+    This is :func:`incremental_dedup_indexed` against an index that is
+    never written: the same three corpus-side tables
+    (:func:`build_dedup_index`) derived LAZILY from ``corpus_df`` — a
+    few NARROW corpus passes (text digest; one tokenize+shingle+hash
+    pass feeding the band table and the verification sets), no
+    corpus-corpus pairs, and nothing started in the background: every
+    job construction runs (the within-batch connected-components
+    stage) runs on the caller's thread. A production deployment
+    persists the index once and appends per batch instead (zero
+    corpus-text passes per batch). Candidate volume is batch-sized x
+    band-collision rate, so the cross join scales with the BATCH, not
+    the corpus."""
+    num_hashes, bands = _lsh_params(threshold, num_hashes, bands)
+    index = _index_frames(corpus_df, text_col, id_col, n, num_hashes, bands, base_hash)
+    return _dedup_against_index(
+        new_df, index, text_col, id_col, n, threshold, num_hashes, bands, base_hash
     )
-
-    # (2) exact tier vs corpus: anti-join on the normalized digest
-    # (temp column name dodges any real column on the caller's input —
-    # the contract is "all original columns back", including weird ones)
-    h = "__h"
-    while h in batch.columns:
-        h += "_"
-    digest = F.md5(normalized_text(F.col(text_col)))
-    corpus_hashes = corpus_df.select(digest.alias(h)).distinct()
-    batch = batch.withColumn(h, digest).join(
-        corpus_hashes, h, "left_anti"
-    ).drop(h).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-
-    # (3) near tier vs corpus: band-bucket equi-join between batch and
-    # corpus signatures, then exact-Jaccard verification on the
-    # candidates only. Each side runs the tokenize+shingle+hash pass
-    # ONCE (the minhash_lsh_pairs r8 pattern): the hashed-shingle
-    # projection feeds both the signature minima and the verification
-    # sets from behind a lazy localCheckpoint barrier. The arrays are
-    # never carried THROUGH the band explosion (that would multiply
-    # them across `bands` exploded rows); the checkpoint trades
-    # executor-local storage of the hashed arrays for half the map
-    # passes — the same trade ``survivors`` above already makes for
-    # the batch text itself.
-    harr_new = _hashed_shingles(batch, text_col, id_col, n, base_hash).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-    sig_new = _signatures_from_hashed(harr_new, num_hashes)
-    sig_corp = _signatures_from_hashed(harr_corp, num_hashes)
-    cand = (
-        _banded(sig_new, num_hashes, bands)
-        .withColumnRenamed("id", "new_id")
-        .join(
-            _banded(sig_corp, num_hashes, bands).withColumnRenamed("id", "corp_id"),
-            ["band", "band_hash"],
-        )
-        .select("new_id", "corp_id")
-        .distinct()
-    )
-
-    def _sets(harr: DataFrame, out_id: str, out_set: str) -> DataFrame:
-        return harr.select(
-            F.col("id").alias(out_id),
-            F.array_distinct("__harr").alias(out_set),
-        )
-
-    joined = cand.join(_sets(harr_new, "new_id", "set_a"), "new_id").join(
-        _sets(harr_corp, "corp_id", "set_b"), "corp_id"
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
-    losers = (
-        joined.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("new_id").alias(id_col))
-        .distinct()
-    )
-    return batch.join(losers, id_col, "left_anti")
 
 
 # --- persisted dedup index (VERDICT r5 #5) ------------------------------
@@ -853,27 +753,48 @@ def build_dedup_index(
 ) -> None:
     """Materialize the corpus-side dedup artifacts as parquet under
     ``path`` — one corpus pass now, zero corpus passes per future
-    batch. ``incremental_dedup_indexed(batch, spark, path)`` is then
+    batch. ``incremental_dedup_indexed(batch, path)`` is then
     output-equivalent to ``incremental_dedup(batch, corpus)`` (pinned
-    by tests/test_text_dedup.py).
+    by tests/test_pipelines.py).
 
     Appending a deduped batch to the corpus = appending the SAME three
     projections of the batch's survivors (mode="append"); parquet
     append is atomic per file, so index growth is a plain ETL step."""
-    if num_hashes is None or bands is None:
-        auto_hashes, auto_bands = minhash_params(threshold)
-        num_hashes = auto_hashes if num_hashes is None else num_hashes
-        bands = auto_bands if bands is None else bands
-    spark = corpus_df.sparkSession
-
+    num_hashes, bands = _lsh_params(threshold, num_hashes, bands)
     _write_index_tables(
         corpus_df, path, "overwrite", text_col, id_col, n, num_hashes, bands, base_hash
     )
-
-    spark.createDataFrame(
+    corpus_df.sparkSession.createDataFrame(
         [(n, float(threshold), int(num_hashes), int(bands), base_hash)],
         list(_INDEX_META_COLS),
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+
+
+def _index_frames(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+    base_hash: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(digests, bands, sets)``: the index tables of ``df`` as lazy
+    frames, in the persisted tables' columns and hash domains. The
+    tokenize+shingle+hash pass — the dominant map cost — runs ONCE
+    behind a lazy localCheckpoint fence and feeds both the band table
+    and the verification sets; without the fence Catalyst executes
+    the projection once per consumer. The arrays are never carried
+    THROUGH the band explosion (that would multiply them across
+    ``bands`` exploded rows)."""
+    harr = _hashed_shingles(
+        df, text_col, id_col, n, base_hash, with_sset=True
+    ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
+    band_rows = _banded(_signatures_from_hashed(harr, num_hashes), num_hashes, bands)
+    digests = df.select(
+        F.md5(normalized_text(F.col(text_col))).alias("digest")
+    ).distinct()
+    return digests, band_rows, harr.select("id", "sset")
 
 
 def _write_index_tables(
@@ -896,22 +817,28 @@ def _write_index_tables(
     # the replay: it re-appends bands/sets (duplicate rows degrade
     # space, not answers — consumers distinct() candidates and losers)
     # and only then commits the digests marker.
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, base_hash)
+    digests, band_rows, sets = _index_frames(
+        df, text_col, id_col, n, num_hashes, bands, base_hash
+    )
     # partitioned by band: the batch probe joins on (band, band_hash),
     # so partition pruning would let a band-sliced probe read 1/bands
     # of the table; more importantly the layout keeps each band's
     # bucket table contiguous for the shuffle read
-    _banded(sig, num_hashes, bands).write.mode(mode).partitionBy("band").parquet(
-        f"{path}/bands"
-    )
+    band_rows.write.mode(mode).partitionBy("band").parquet(f"{path}/bands")
+    sets.write.mode(mode).parquet(f"{path}/sets")
+    digests.write.mode(mode).parquet(f"{path}/digests")
 
-    _hashed_sets(df, text_col, id_col, n, "id", "sset").write.mode(mode).parquet(
-        f"{path}/sets"
-    )
 
-    digest = F.md5(normalized_text(F.col(text_col)))
-    df.select(digest.alias("digest")).distinct().write.mode(mode).parquet(
-        f"{path}/digests"
+def _index_meta(spark: SparkSession, path: str) -> tuple[int, float, int, int, str]:
+    """``(n, threshold, num_hashes, bands, base_hash)`` from the index's
+    meta table."""
+    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    return (
+        int(meta["n"]),
+        float(meta["threshold"]),
+        int(meta["num_hashes"]),
+        int(meta["bands"]),
+        meta["base_hash"],
     )
 
 
@@ -930,18 +857,9 @@ def append_dedup_index(
     consumers anti-join digests and ``distinct()`` both the candidate
     pairs and the loser set, so duplicate index rows cannot change the
     survivor set."""
-    spark = batch_df.sparkSession
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    n, _, num_hashes, bands, base_hash = _index_meta(batch_df.sparkSession, path)
     _write_index_tables(
-        batch_df,
-        path,
-        "append",
-        text_col,
-        id_col,
-        int(meta["n"]),
-        int(meta["num_hashes"]),
-        int(meta["bands"]),
-        meta["base_hash"],
+        batch_df, path, "append", text_col, id_col, n, num_hashes, bands, base_hash
     )
 
 
@@ -952,54 +870,74 @@ def incremental_dedup_indexed(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """``incremental_dedup`` against a persisted index instead of the
-    corpus itself: same three tiers (within-batch near-dedup, exact
-    anti-join, banded-LSH + exact-Jaccard verify), but every
-    corpus-side input is a pre-computed parquet read — the per-batch
-    cost no longer includes normalizing/shingling/hashing the corpus
-    at all. LSH parameters come from the index's meta table (they are
-    baked into the stored signatures; passing different ones would
-    silently compare incompatible hash families)."""
+    corpus itself: the same three tiers, but every corpus-side input
+    is a parquet read — the per-batch cost no longer includes
+    normalizing/shingling/hashing the corpus at all. LSH parameters
+    come from the index's meta table (they are baked into the stored
+    signatures; passing different ones would silently compare
+    incompatible hash families)."""
     spark = new_df.sparkSession
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    n, threshold = int(meta["n"]), float(meta["threshold"])
-    num_hashes, bands = int(meta["num_hashes"]), int(meta["bands"])
-    base_hash = meta["base_hash"]
+    index = tuple(
+        spark.read.parquet(f"{index_path}/{t}") for t in ("digests", "bands", "sets")
+    )
+    return _dedup_against_index(
+        new_df, index, text_col, id_col, *_index_meta(spark, index_path)
+    )
 
+
+def _dedup_against_index(
+    new_df: DataFrame,
+    index: tuple[DataFrame, DataFrame, DataFrame],
+    text_col: str,
+    id_col: str,
+    n: int,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    base_hash: str,
+) -> DataFrame:
+    """The three incremental-dedup tiers of ``new_df`` against a
+    corpus-side ``(digests, bands, sets)`` index — persisted parquet or
+    the lazy :func:`_index_frames` of a corpus, the one implementation
+    behind both public operators."""
+    digests, corp_bands, corp_sets = index
+
+    # (1) within-batch exact + near dedup. No extra barrier here:
+    # near_dedup_corpus's own ``survivors`` checkpoint already cuts the
+    # expensive prefix, and the post-digest checkpoint below is the
+    # chain's reuse point, so this segment executes exactly once.
     batch = near_dedup_corpus(
         new_df, text_col, id_col, n, threshold, num_hashes, bands, base_hash
-    ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
+    )
 
+    # (2) exact tier vs corpus: anti-join on the normalized digest
+    # (temp column name dodges any real column on the caller's input —
+    # the contract is "all original columns back", including weird ones)
     h = "__h"
     while h in batch.columns:
         h += "_"
-    digest = F.md5(normalized_text(F.col(text_col)))
-    corpus_hashes = spark.read.parquet(f"{index_path}/digests").select(
-        F.col("digest").alias(h)
-    )
     batch = (
-        batch.withColumn(h, digest)
-        .join(corpus_hashes, h, "left_anti")
+        batch.withColumn(h, F.md5(normalized_text(F.col(text_col))))
+        .join(digests.select(F.col("digest").alias(h)), h, "left_anti")
         .drop(h)
         .localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     )
 
-    sig_new = minhash_signatures(batch, text_col, id_col, n, num_hashes, base_hash)
-    corp_bands = spark.read.parquet(f"{index_path}/bands").select(
-        F.col("id").alias("corp_id"), "band", "band_hash"
+    # (3) near tier vs corpus: band-bucket equi-join between the batch's
+    # own index frames and the corpus's, then exact-Jaccard
+    # verification on the candidates only
+    _, new_bands, new_sets = _index_frames(
+        batch, text_col, id_col, n, num_hashes, bands, base_hash
     )
     cand = (
-        _banded(sig_new, num_hashes, bands)
-        .withColumnRenamed("id", "new_id")
-        .join(corp_bands, ["band", "band_hash"])
+        new_bands.withColumnRenamed("id", "new_id")
+        .join(corp_bands.withColumnRenamed("id", "corp_id"), ["band", "band_hash"])
         .select("new_id", "corp_id")
         .distinct()
     )
-    corp_sets = spark.read.parquet(f"{index_path}/sets").select(
-        F.col("id").alias("corp_id"), F.col("sset").alias("set_b")
-    )
     joined = cand.join(
-        _hashed_sets(batch, text_col, id_col, n, "new_id", "set_a"), "new_id"
-    ).join(corp_sets, "corp_id")
+        new_sets.withColumnsRenamed({"id": "new_id", "sset": "set_a"}), "new_id"
+    ).join(corp_sets.withColumnsRenamed({"id": "corp_id", "sset": "set_b"}), "corp_id")
     inter = F.size(F.array_intersect("set_a", "set_b"))
     union = F.size("set_a") + F.size("set_b") - inter
     losers = (

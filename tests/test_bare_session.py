@@ -26,6 +26,11 @@ _FACTORY_CONFS = ["spark.sql.legacy.parquet.nanosAsLong"]
 
 @pytest.fixture()
 def bare_spark(spark):
+    from gapless_deribit_clickhouse_spark.core.tables import _CATALOG
+
+    # a catalog hit would hand back a plan analyzed under the factory
+    # confs and skip the bare scan this file guards
+    _CATALOG.clear()
     saved: dict[str, str | None] = {}
     for key in _FACTORY_CONFS:
         try:
@@ -55,3 +60,30 @@ def test_entry_runs_on_bare_session(bare_spark):
 
     df = entry.entry(bare_spark)
     assert df.count() >= 0
+
+
+def test_catalog_hit_still_forces_utc(spark):
+    """A plan-catalog hit must re-apply the UTC session timezone: a
+    session switched to another zone after its first load would
+    otherwise extract hours/dates off the UTC oracle."""
+    from gapless_deribit_clickhouse_spark.core.tables import load_table
+
+    load_table(spark, SF_DIR, "events")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    load_table(spark, SF_DIR, "events")
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_catalog_is_per_session(spark):
+    """A ``newSession()`` sibling shares the application but not the
+    session: a catalog hit must never return a DataFrame bound to
+    another session."""
+    from gapless_deribit_clickhouse_spark.core.tables import load_table
+
+    sibling = spark.newSession()
+    assert load_table(spark, SF_DIR, "events").sparkSession is spark
+    df = load_table(sibling, SF_DIR, "events")
+    assert df.sparkSession is sibling
+    assert load_table(sibling, SF_DIR, "events") is df
+    assert sibling.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert df.count() > 0

@@ -1199,12 +1199,55 @@ def test_incremental_dedup_against_corpus(spark):
     assert set(again.doc_id) == ids
 
 
-def test_incremental_dedup_indexed_equivalent(spark, tmp_path):
+def test_incremental_dedup_construction_is_lazy(spark):
+    """Building ``incremental_dedup(batch, corpus)`` starts no thread
+    and submits no job outside the caller's job group: the eager jobs
+    construction does run (the within-batch connected-components
+    stage) run synchronously on the caller's thread, where they can be
+    seen and cancelled. A construct-only or ``explain()`` caller never
+    launches a background corpus pass."""
+    import threading
+
+    from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
+        incremental_dedup,
+    )
+
+    def sent(i: int) -> str:
+        return " ".join(f"corp{i}tok{j}" for j in range(12))
+
+    corpus = spark.createDataFrame(
+        [(i, sent(i)) for i in range(10)], ["doc_id", "text"]
+    )
+    batch = spark.createDataFrame(
+        [(100, sent(3)), (101, sent(4) + " extra"), (102, "a fresh doc")],
+        ["doc_id", "text"],
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    threads = threading.active_count()
+    sc.setJobGroup("incremental_dedup_construct", "construction")
+    try:
+        df = incremental_dedup(batch, corpus, threshold=0.8)
+        df.explain()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert threading.active_count() == threads
+    bus.waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup()) - ungrouped == set()
+    assert sorted(r.doc_id for r in df.collect()) == [102]
+
+
+@pytest.mark.parametrize("base_hash", ["md5", "xxhash64"])
+def test_incremental_dedup_indexed_equivalent(spark, tmp_path, base_hash):
     """The persisted-index path must return EXACTLY the recompute
     path's rows: build_dedup_index(corpus) then
     incremental_dedup_indexed(batch, index) == incremental_dedup(
     batch, corpus) — the steady-state 100 TB shape where each batch
-    touches zero corpus text (VERDICT r5 #5)."""
+    touches zero corpus text — under either base hash, with the
+    on-disk table schemas pinned."""
     from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
         build_dedup_index,
         incremental_dedup,
@@ -1232,16 +1275,28 @@ def test_incremental_dedup_indexed_equivalent(spark, tmp_path):
     )
 
     idx = str(tmp_path / "dedup_index")
-    build_dedup_index(corpus, idx, threshold=0.8)
+    build_dedup_index(corpus, idx, threshold=0.8, base_hash=base_hash)
     via_index = incremental_dedup_indexed(batch, idx).toPandas()
-    recompute = incremental_dedup(batch, corpus, threshold=0.8).toPandas()
+    recompute = incremental_dedup(
+        batch, corpus, threshold=0.8, base_hash=base_hash
+    ).toPandas()
     assert sorted(via_index.doc_id) == sorted(recompute.doc_id) == [
         100, 101, 102, 103, 104,
     ]
     assert list(via_index.columns) == list(recompute.columns)
     # the meta table pins the LSH family; the stored params round-trip
     meta = spark.read.parquet(f"{idx}/meta").collect()[0]
-    assert (meta["n"], meta["base_hash"]) == (3, "md5")
+    assert (meta["n"], meta["base_hash"]) == (3, base_hash)
+    # the on-disk format: existing indexes must stay readable
+    schemas = {
+        t: spark.read.parquet(f"{idx}/{t}").schema.simpleString()
+        for t in ("digests", "bands", "sets")
+    }
+    assert schemas == {
+        "digests": "struct<digest:string>",
+        "bands": "struct<id:bigint,band_hash:string,band:int>",
+        "sets": "struct<id:bigint,sset:array<bigint>>",
+    }
     # appending the surviving batch through the API (the "plain ETL
     # step" the build docstring promises): after the append, re-running
     # the batch drops everything — the index now contains it
