@@ -12,13 +12,21 @@ Scale design (the whole point — these run over billions of docs):
 - minhash_lsh_pairs: k md5-derived min-hashes -> b bands of r rows ->
   band-hash bucket join -> candidate pairs -> exact Jaccard verify.
   Shuffle is on band buckets — the standard sub-quadratic LSH shape.
+  Every MinHash-LSH operator here (the all-pairs, near-dedup and both
+  incremental ones) shares one projection, :func:`_index_frames`, and
+  one candidate verifier, :func:`_lsh_pairs`.
 - simhash64: 64-bit weighted-bit fingerprint from token md5s; near-dup
   = hamming distance <= k, bucketed by 4×16-bit chunks (pigeonhole:
   hamming<=3 over 4 chunks guarantees one exact chunk match).
 
-Everything is built from md5 (deterministic, available in Spark,
-DuckDB, and Python) — no engine-specific hash functions, so oracles
-and tests can reproduce values exactly.
+Values an oracle has to reproduce bit for bit — text digests, MinHash
+signatures, band keys, SimHash fingerprints — are built from md5
+(deterministic, available in Spark, DuckDB, and Python) by default.
+Spark's ``xxhash64`` is used where only equality matters: shingle join
+keys and the shingle sets exact Jaccard is verified on (the dedup
+index's ``sets`` domain), which agree with a string comparison short
+of a 64-bit collision; and as the opt-in ``base_hash="xxhash64"``
+scale path, whose signatures have no oracle counterpart.
 """
 
 from __future__ import annotations
@@ -303,85 +311,6 @@ def minhash_affine_params(num_hashes: int, seed: int = 12345) -> list[tuple[int,
     ]
 
 
-def _hashed_shingles(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    base_hash: str,
-    with_sset: bool = False,
-) -> DataFrame:
-    """(id, __harr[, sset]): the ONE tokenize+shingle+hash pass both
-    the signature minima and the exact-Jaccard verification derive
-    from.
-
-    ``__harr`` holds the per-shingle base hash, UNREDUCED (60-bit md5
-    prefix / full signed xxhash64); the mod-p reduction the affine
-    minhash family needs happens inside :func:`_signatures_from_hashed`
-    — reducing here would shrink the comparison domain to 31 bits and
-    let unrelated large shingle sets accrue spurious intersections.
-    ``shingles()`` is distinct and the hash effectively injective at
-    this width, so ``__harr`` doubles as a comparison set.
-
-    ``base_hash``: ``md5`` (default) is bit-reproducible in the DuckDB
-    oracle; ``xxhash64`` is the scale path — the same codegen'd 64-bit
-    hash Spark's own MinHashLSH family builds on, ~3x cheaper than a
-    hex digest + parse, engine-internal only. Near-dup quality is
-    equivalent (both are uniform over the shingle set); signatures are
-    NOT comparable across the two modes.
-
-    ``with_sset`` adds the dedup index's verification set,
-    ``array_distinct(xxhash64(shingle))`` whatever ``base_hash`` is (the
-    on-disk ``sets`` domain), from the same shingle array: with
-    ``xxhash64`` it IS the distinct base hash, so nothing is hashed
-    twice."""
-    arr = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("__arr")
-    )
-    if base_hash == "md5":
-        base = (
-            "CAST(conv(substring(md5(concat('0:', s)), 1, 15), 16, 10) "
-            "AS BIGINT)"
-        )
-    elif base_hash == "xxhash64":
-        base = "xxhash64(s)"
-    else:
-        raise ValueError(f"base_hash must be md5|xxhash64, got {base_hash!r}")
-    cols = [F.col("id"), F.expr(f"transform(__arr, s -> {base})").alias("__harr")]
-    if with_sset and base_hash == "md5":
-        cols.append(
-            F.expr("array_distinct(transform(__arr, s -> xxhash64(s)))").alias("sset")
-        )
-    harr = arr.select(*cols)
-    if with_sset and base_hash == "xxhash64":
-        harr = harr.withColumn("sset", F.array_distinct("__harr"))
-    return harr
-
-
-def _signatures_from_hashed(harr: DataFrame, num_hashes: int) -> DataFrame:
-    # pmod reduces the unreduced base into [0, p) first (matching the
-    # former reduced-at-hash-time values exactly: 60-bit md5 prefixes
-    # are non-negative so % == pmod, and the xxhash64 branch always
-    # used pmod), then the affine family; (p-1)^2 fits in int64.
-    # The (a, b) family is a LITERAL struct array folded by ONE outer
-    # lambda (optimization r13): the former num_hashes separate
-    # `array_min(transform(...))` expressions each carried their own
-    # lambda, and analyzing/optimizing 210 lambda bindings (the
-    # auto-sized threshold-0.8 family) cost ~4x this form per
-    # construction — same integer arithmetic, element order, and
-    # values, byte-identical signatures.
-    p = MINHASH_PRIME
-    fam = ", ".join(
-        f"named_struct('a', {a}L, 'b', {b}L)"
-        for a, b in minhash_affine_params(num_hashes)
-    )
-    sig = (
-        f"transform(array({fam}), pr -> "
-        f"array_min(transform(__harr, h -> (pmod(h, {p}L) * pr.a + pr.b) % {p}L)))"
-    )
-    return harr.select("id", F.expr(sig).alias("signature"))
-
-
 def minhash_params(
     threshold: float,
     target_recall: float = 0.9,
@@ -423,10 +352,78 @@ def _lsh_params(
     return num_hashes, bands
 
 
-def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band, band_hash) rows from a signature table: each band's
-    sub-signature md5-hashed to one join key — the LSH bucket key both
-    the all-pairs and the incremental operators shuffle on."""
+def _index_frames(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+    base_hash: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(digests, bands, sets)``: the dedup index tables of ``df`` as
+    lazy frames, in the persisted tables' columns and hash domains —
+    the ONE MinHash projection every LSH operator in this module uses.
+
+    - ``digests`` (digest): distinct md5 of the normalized text.
+    - ``bands`` (id, band, band_hash): each band's sub-signature
+      md5-hashed to one join key, the LSH bucket key.
+    - ``sets`` (id, sset): ``array_distinct(xxhash64(shingle))``
+      whatever ``base_hash`` is — the domain exact Jaccard is verified
+      on; with ``xxhash64`` it IS the distinct base hash, so nothing is
+      hashed twice.
+
+    The tokenize+shingle+hash pass — the dominant map cost — runs ONCE
+    behind a lazy localCheckpoint fence and feeds both the band table
+    and the verification sets; without the fence Catalyst executes
+    the projection once per consumer (VERDICT r7 #3). The arrays are
+    never carried THROUGH the band explosion (that would multiply them
+    across ``bands`` exploded rows).
+
+    The per-shingle base hash ``__harr`` is UNREDUCED (60-bit md5
+    prefix / full signed xxhash64); the mod-p reduction the affine
+    minhash family needs happens inside the signature expression.
+    ``base_hash``: ``md5`` (default) is bit-reproducible in the DuckDB
+    oracle; ``xxhash64`` is the scale path — the same codegen'd 64-bit
+    hash Spark's own MinHashLSH family builds on, ~3x cheaper than a
+    hex digest + parse, engine-internal only. Near-dup quality is
+    equivalent (both are uniform over the shingle set); signatures are
+    NOT comparable across the two modes."""
+    if base_hash == "md5":
+        base = (
+            "CAST(conv(substring(md5(concat('0:', s)), 1, 15), 16, 10) "
+            "AS BIGINT)"
+        )
+        sset = "transform(__arr, s -> xxhash64(s))"
+    elif base_hash == "xxhash64":
+        base = "xxhash64(s)"
+        sset = "__harr"
+    else:
+        raise ValueError(f"base_hash must be md5|xxhash64, got {base_hash!r}")
+    harr = (
+        ensure_parallelism(df)
+        .select(F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("__arr"))
+        .select("id", "__arr", F.expr(f"transform(__arr, s -> {base})").alias("__harr"))
+        .select("id", "__harr", F.expr(f"array_distinct({sset})").alias("sset"))
+        .localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
+    )
+    # pmod reduces the unreduced base into [0, p) first (60-bit md5
+    # prefixes are non-negative so % == pmod), then the affine family;
+    # (p-1)^2 fits in int64. The (a, b) family is a LITERAL struct
+    # array folded by ONE outer lambda (optimization r13): num_hashes
+    # separate `array_min(transform(...))` expressions each carried
+    # their own lambda, and analyzing/optimizing 210 lambda bindings
+    # (the auto-sized threshold-0.8 family) cost ~4x this form per
+    # construction — byte-identical signatures.
+    p = MINHASH_PRIME
+    fam = ", ".join(
+        f"named_struct('a', {a}L, 'b', {b}L)"
+        for a, b in minhash_affine_params(num_hashes)
+    )
+    sig = (
+        f"transform(array({fam}), pr -> "
+        f"array_min(transform(__harr, h -> (pmod(h, {p}L) * pr.a + pr.b) % {p}L)))"
+    )
     r = num_hashes // bands
     band_sql = ", ".join(
         "md5(concat_ws(',', "
@@ -434,8 +431,51 @@ def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
         + "))"
         for b in range(bands)
     )
-    return sig.select(
+    band_rows = harr.select("id", F.expr(sig).alias("signature")).select(
         "id", F.posexplode(F.expr(f"array({band_sql})")).alias("band", "band_hash")
+    )
+    digests = df.select(
+        F.md5(normalized_text(F.col(text_col))).alias("digest")
+    ).distinct()
+    return digests, band_rows, harr.select("id", "sset")
+
+
+def _lsh_pairs(
+    a: tuple[DataFrame, DataFrame],
+    b: tuple[DataFrame, DataFrame] | None,
+    threshold: float,
+) -> DataFrame:
+    """``(id_a, id_b, jaccard)``: the pairs whose band tables share a
+    ``(band, band_hash)`` bucket and whose exact Jaccard on the
+    ``sset`` domain is >= ``threshold``. ``a`` and ``b`` are the
+    ``(bands, sets)`` of :func:`_index_frames` frames; ``b=None``
+    pairs ``a`` with itself (each unordered pair once, ``id_a <
+    id_b``), otherwise every ``a`` x ``b`` pair is a candidate.
+
+    Verification does not explode again: each candidate pair joins the
+    two docs' shingle-set ARRAYS and intersects them per pair —
+    candidates are few (that's the point of LSH), so two narrow joins
+    + array_intersect beat re-exploding the sets into two more
+    shuffles."""
+    bands_a, sets_a = a
+    bands_b, sets_b = a if b is None else b
+    cand = bands_a.withColumnRenamed("id", "id_a").join(
+        bands_b.withColumnRenamed("id", "id_b"), ["band", "band_hash"]
+    )
+    if b is None:
+        cand = cand.filter(F.col("id_a") < F.col("id_b"))
+    joined = (
+        cand.select("id_a", "id_b")
+        .distinct()
+        .join(sets_a.withColumnsRenamed({"id": "id_a", "sset": "set_a"}), "id_a")
+        .join(sets_b.withColumnsRenamed({"id": "id_b", "sset": "set_b"}), "id_b")
+    )
+    inter = F.size(F.array_intersect("set_a", "set_b"))
+    union = F.size("set_a") + F.size("set_b") - inter
+    return (
+        joined.withColumn("jaccard", inter / union)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -454,47 +494,21 @@ def minhash_lsh_pairs(
     rows-per-band r = num_hashes//bands; candidate iff some band's
     sub-signature matches exactly (bucket equi-join on the band hash —
     sub-quadratic, shuffle keyed by (band, hash)). Verification joins
-    candidates back to shingle sets and keeps jaccard >= threshold.
+    candidates back to their shingle sets and keeps jaccard >=
+    threshold. The sets are the dedup index's ``sset`` domain
+    (``xxhash64`` per shingle) under either ``base_hash``: the Jaccard
+    equals the string-set Jaccard short of a 64-bit collision, and
+    ``md5`` mode pays one extra xxhash64 per shingle for it.
 
     ``num_hashes=None`` auto-sizes the signature from ``threshold``
     via :func:`minhash_params` (the defaults 32/8 stay for oracle
     stability).
     """
     num_hashes, bands = _lsh_params(threshold, num_hashes, bands)
-    # the hashed-shingle pass (tokenize + shingle + per-shingle hash —
-    # the dominant map cost of the whole tier) runs ONCE and feeds
-    # both the signature minima and the verification sets; without the
-    # lazy localCheckpoint barrier Catalyst executes the projection
-    # once per consumer (VERDICT r7 #3: the re-tokenization between
-    # the sig and verify branches was the training_set floor)
-    harr = _hashed_shingles(df, text_col, id_col, n, base_hash).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-    sig = _signatures_from_hashed(harr, num_hashes)
-    banded = _banded(sig, num_hashes, bands)
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), on=["band", "band_hash"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
+    _, band_rows, sets = _index_frames(
+        df, text_col, id_col, n, num_hashes, bands, base_hash
     )
-    # verify with exact Jaccard WITHOUT exploding again: join each
-    # candidate pair to the two docs' hashed-shingle ARRAYS and
-    # intersect per pair — candidates are few (that's the point of
-    # LSH), so two narrow joins + array_intersect beat re-exploding
-    # the corpus into two more shuffles. array_distinct guards the
-    # set sizes against the (negligible) within-doc hash collision.
-    arr = harr.select("id", F.array_distinct("__harr").alias("sset"))
-    joined = (
-        cand.join(arr.withColumnsRenamed({"id": "id_a", "sset": "set_a"}), "id_a")
-        .join(arr.withColumnsRenamed({"id": "id_b", "sset": "set_b"}), "id_b")
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
-    return (
-        joined.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _lsh_pairs((band_rows, sets), None, threshold)
 
 
 def simhash64(
@@ -642,8 +656,30 @@ def near_dedup_corpus(
     local-checkpointed (lazily, the ``connected_components`` pattern)
     because the components stage runs its own actions: without the
     lineage cut, the final anti join would re-execute the exact-tier
-    scan + groupBy + semi join a second time.
+    scan + groupBy + semi join a second time. The LSH stage is
+    :func:`minhash_lsh_pairs`' (same projection, same verifier), so
+    near-duplicate Jaccard is checked on the index ``sset`` domain.
     """
+    num_hashes, bands = _lsh_params(threshold, num_hashes, bands)
+    return _near_dedup_batch(
+        df, text_col, id_col, n, threshold, num_hashes, bands, base_hash
+    )[0]
+
+
+def _near_dedup_batch(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    base_hash: str,
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
+    """:func:`near_dedup_corpus`'s kept rows, plus the ``(bands,
+    sets)`` index frames of its exact-tier survivors — the batch side
+    the incremental operators probe the corpus with, so a batch is
+    shingled once for both tiers."""
     from gapless_deribit_clickhouse_spark.operators.connected_components import (
         connected_components,
     )
@@ -652,27 +688,22 @@ def near_dedup_corpus(
         id_col
     )
     survivors = df.join(winners, id_col, "semi").localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-    pairs = minhash_lsh_pairs(
-        survivors,
-        text_col=text_col,
-        id_col=id_col,
-        n=n,
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=threshold,
-        base_hash=base_hash,
+    _, band_rows, sets = _index_frames(
+        survivors, text_col, id_col, n, num_hashes, bands, base_hash
     )
     cc_stats: dict = {}
-    comp = connected_components(pairs, stats=cc_stats)
+    comp = connected_components(
+        _lsh_pairs((band_rows, sets), None, threshold), stats=cc_stats
+    )
     if cc_stats.get("input_edges") == 0:
         # no near-dup pairs at all (the steady-state common case for a
         # clean corpus): the loser set is empty by construction, so the
         # anti join is the identity — skip it (optimization r13)
-        return survivors
+        return survivors, (band_rows, sets)
     losers = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
-    return survivors.join(losers, id_col, "left_anti")
+    return survivors.join(losers, id_col, "left_anti"), (band_rows, sets)
 
 
 def incremental_dedup(
@@ -768,33 +799,6 @@ def build_dedup_index(
         [(n, float(threshold), int(num_hashes), int(bands), base_hash)],
         list(_INDEX_META_COLS),
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def _index_frames(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    num_hashes: int,
-    bands: int,
-    base_hash: str,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """``(digests, bands, sets)``: the index tables of ``df`` as lazy
-    frames, in the persisted tables' columns and hash domains. The
-    tokenize+shingle+hash pass — the dominant map cost — runs ONCE
-    behind a lazy localCheckpoint fence and feeds both the band table
-    and the verification sets; without the fence Catalyst executes
-    the projection once per consumer. The arrays are never carried
-    THROUGH the band explosion (that would multiply them across
-    ``bands`` exploded rows)."""
-    harr = _hashed_shingles(
-        df, text_col, id_col, n, base_hash, with_sset=True
-    ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-    band_rows = _banded(_signatures_from_hashed(harr, num_hashes), num_hashes, bands)
-    digests = df.select(
-        F.md5(normalized_text(F.col(text_col))).alias("digest")
-    ).distinct()
-    return digests, band_rows, harr.select("id", "sset")
 
 
 def _write_index_tables(
@@ -902,11 +906,9 @@ def _dedup_against_index(
     behind both public operators."""
     digests, corp_bands, corp_sets = index
 
-    # (1) within-batch exact + near dedup. No extra barrier here:
-    # near_dedup_corpus's own ``survivors`` checkpoint already cuts the
-    # expensive prefix, and the post-digest checkpoint below is the
-    # chain's reuse point, so this segment executes exactly once.
-    batch = near_dedup_corpus(
+    # (1) within-batch exact + near dedup; it also hands back the index
+    # frames of its exact-tier survivors, the batch side of tier (3)
+    batch, batch_index = _near_dedup_batch(
         new_df, text_col, id_col, n, threshold, num_hashes, bands, base_hash
     )
 
@@ -920,30 +922,15 @@ def _dedup_against_index(
         batch.withColumn(h, F.md5(normalized_text(F.col(text_col))))
         .join(digests.select(F.col("digest").alias(h)), h, "left_anti")
         .drop(h)
-        .localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     )
 
-    # (3) near tier vs corpus: band-bucket equi-join between the batch's
-    # own index frames and the corpus's, then exact-Jaccard
-    # verification on the candidates only
-    _, new_bands, new_sets = _index_frames(
-        batch, text_col, id_col, n, num_hashes, bands, base_hash
-    )
-    cand = (
-        new_bands.withColumnRenamed("id", "new_id")
-        .join(corp_bands.withColumnRenamed("id", "corp_id"), ["band", "band_hash"])
-        .select("new_id", "corp_id")
-        .distinct()
-    )
-    joined = cand.join(
-        new_sets.withColumnsRenamed({"id": "new_id", "sset": "set_a"}), "new_id"
-    ).join(corp_sets.withColumnsRenamed({"id": "corp_id", "sset": "set_b"}), "corp_id")
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
+    # (3) near tier vs corpus: band-bucket equi-join of the batch's
+    # exact-tier survivors against the corpus, verified on the
+    # candidates only. It may flag docs tiers (1)/(2) already dropped;
+    # the anti join onto ``batch`` discards those.
     losers = (
-        joined.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("new_id").alias(id_col))
+        _lsh_pairs(batch_index, (corp_bands, corp_sets), threshold)
+        .select(F.col("id_a").alias(id_col))
         .distinct()
     )
     return batch.join(losers, id_col, "left_anti")

@@ -135,8 +135,13 @@ class CheckpointStore:
     def save(self, currency: str, start_ts: int, end_ts: int, state: dict) -> None:
         os.makedirs(self.directory, exist_ok=True)
         state = dict(state, updated_at=datetime.now(timezone.utc).isoformat())
-        with open(self._path(currency, start_ts, end_ts), "w") as f:
+        # write-then-rename: a crash mid-dump leaves the previous
+        # checkpoint in place, never a truncated file ``load`` cannot parse
+        path = self._path(currency, start_ts, end_ts)
+        tmp = f"{path}.tmp"
+        with open(tmp, "w") as f:
             json.dump(state, f)
+        os.replace(tmp, path)
 
     def clear(self, currency: str, start_ts: int, end_ts: int) -> None:
         path = self._path(currency, start_ts, end_ts)

@@ -8,10 +8,11 @@ Batch round 6 built the persisted dedup index
 batch dedups against parquet artifacts without touching corpus text.
 This module closes the loop for continuous arrival: a ``foreachBatch``
 sink that (1) near-dedups the micro-batch against the index, (2) lands
-the survivors exactly-once into a ``batch_id`` partition (the same
-dynamic-partition-overwrite replay contract as
-``write_stream_idempotent``), and (3) appends the survivors' index
-projections — so batch N+1 dedups against everything batch N kept.
+the survivors exactly-once into a ``batch_id`` partition through
+``ParquetServingConnector.write_batch`` (the dynamic-partition-
+overwrite replay contract every parquet streaming sink here shares),
+and (3) appends the survivors' index projections — so batch N+1
+dedups against everything batch N kept.
 Micro-batches execute serially, which is what makes step (3) a
 correct cross-batch dedup barrier without any locking.
 
@@ -30,7 +31,6 @@ anti-joined away with its LSH rows permanently missing.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from gapless_deribit_clickhouse_spark.core.barrier import BARRIER_STORAGE
@@ -38,6 +38,7 @@ from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
     append_dedup_index,
     incremental_dedup_indexed,
 )
+from gapless_deribit_clickhouse_spark.sinks.connector import ParquetServingConnector
 
 
 def stream_dedup_ingest(
@@ -63,13 +64,7 @@ def stream_dedup_ingest(
         kept = incremental_dedup_indexed(
             batch_df, index_path, text_col, id_col
         ).localCheckpoint(eager=True, storageLevel=BARRIER_STORAGE)
-        (
-            kept.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_path)
-        )
+        ParquetServingConnector(output_path).write_batch(kept, batch_id)
         append_dedup_index(kept, index_path, text_col, id_col)
 
     writer = stream.writeStream.foreachBatch(sink).option(

@@ -34,6 +34,7 @@ from gapless_deribit_clickhouse_spark.operators.merge_rollup import (
     merge_rollup,
     partial_rollup,
 )
+from gapless_deribit_clickhouse_spark.sinks.connector import ParquetServingConnector
 
 
 def _is_missing_path(exc: Exception) -> bool:
@@ -84,13 +85,7 @@ def rollup_state_sink(
         prev = _latest_version_before(spark, state_path, batch_id)
         states = [part] if prev is None else [prev, part]
         merged = merge_rollup(states, keys).localCheckpoint(eager=True, storageLevel=BARRIER_STORAGE)
-        (
-            merged.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_path)
-        )
+        ParquetServingConnector(state_path).write_batch(merged, batch_id)
 
     return sink
 

@@ -10,7 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.exceptions import SourceError
+from gapless_deribit_clickhouse_spark.sources import rest_collector
 from gapless_deribit_clickhouse_spark.sources.rest_collector import (
+    CheckpointStore,
     SyntheticTradePages,
     batch_token,
     collect_trades,
@@ -112,6 +114,26 @@ def test_collect_trades_resume_after_crash(spark, tmp_path):
     n_expected = 2 * 3600 + 1
     assert df.select("trade_id").distinct().count() == n_expected
     assert df.count() == n_expected
+
+
+def test_checkpoint_save_survives_crash_mid_write(tmp_path, monkeypatch):
+    """A crash while the checkpoint JSON is being written must leave the
+    previous checkpoint loadable, not a truncated file that fails the
+    resume with a JSONDecodeError."""
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    key = ("BTC", T0, T0 + HOUR_MS)
+    store.save(*key, {"last_end_ts": 5, "batch_number": 1})
+
+    def torn_dump(obj, f):
+        f.write('{"last_end_ts": 4')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(rest_collector.json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        store.save(*key, {"last_end_ts": 4, "batch_number": 2})
+    monkeypatch.undo()
+    state = store.load(*key)
+    assert (state["last_end_ts"], state["batch_number"]) == (5, 1)
 
 
 # --- §2.9: streaming with watermark dedup + idempotent sink ---

@@ -1310,6 +1310,53 @@ def test_incremental_dedup_indexed_equivalent(spark, tmp_path, base_hash):
     assert len(rerun) == 0
 
 
+@pytest.mark.parametrize(
+    "op, passes", [("incremental_dedup_indexed", 1), ("incremental_dedup", 2)]
+)
+def test_incremental_dedup_shingles_batch_once(spark, tmp_path, monkeypatch, op, passes):
+    """Constructing an incremental operator shingles the batch ONCE:
+    the within-batch tier and the probe against the corpus share one
+    MinHash projection. The index-free path adds exactly one pass, for
+    the corpus side. Same corpus/batch as
+    test_incremental_dedup_indexed_equivalent."""
+    from gapless_deribit_clickhouse_spark.pipelines import text_dedup
+
+    def sent(i: int) -> str:
+        return " ".join(f"corp{i}tok{j}" for j in range(12))
+
+    corpus = spark.createDataFrame(
+        [(i, sent(i)) for i in range(10)], ["doc_id", "text"]
+    )
+    fresh = [
+        (100 + i, " ".join(f"new{i}tok{j}" for j in range(12))) for i in range(5)
+    ]
+    batch = spark.createDataFrame(
+        fresh
+        + [
+            (200, sent(3)),
+            (201, sent(4) + " extra"),
+            (202, fresh[0][1]),
+            (203, fresh[1][1] + " tail"),
+        ],
+        ["doc_id", "text"],
+    )
+    idx = str(tmp_path / "dedup_index")
+    text_dedup.build_dedup_index(corpus, idx, threshold=0.8)
+
+    calls = []
+    real = text_dedup.shingles
+    monkeypatch.setattr(
+        text_dedup, "shingles", lambda *a, **k: calls.append(a) or real(*a, **k)
+    )
+    if op == "incremental_dedup_indexed":
+        df = text_dedup.incremental_dedup_indexed(batch, idx)
+    else:
+        df = text_dedup.incremental_dedup(batch, corpus, threshold=0.8)
+    monkeypatch.undo()
+    assert len(calls) == passes
+    assert sorted(r.doc_id for r in df.collect()) == [100, 101, 102, 103, 104]
+
+
 def test_project_embeddings_jl_properties(spark, emb):
     import numpy as np
 
